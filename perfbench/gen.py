@@ -392,37 +392,54 @@ MARKET_DIM_COLS = (
 ).split()
 
 
+#: share of a file's change events delivered twice in that file
+REDELIVER_SHARE = 0.05
+#: share of a file's change events that revise a key of the file before
+REVISE_SHARE = 0.05
+
+
 def change_feed(
     out_dir: str,
     rng: np.random.Generator,
     market_ids: list[str],
     n_files: int,
     per_file: int,
-    redeliver_share: float = 0.05,
 ) -> dict[str, tuple]:
     """Write a change feed for the gold market dimension as ``n_files``
     parquet files, in arrival order (increasing modification times).
 
     Each change event carries ``event_id`` and ``ts`` plus one full
-    dimension row. Keys are distinct across the feed — mostly existing
-    market ids, about 1 % unseen ones — and ``redeliver_share`` of the
-    events are delivered twice, verbatim, in the same file. Returns the
-    change row per key (``MARKET_DIM_COLS`` order)."""
+    dimension row. Keys are mostly existing market ids, about 1 % unseen
+    ones. ``REDELIVER_SHARE`` of each file's events are delivered twice,
+    verbatim, in the same file. ``REVISE_SHARE`` of each file's events
+    revise a key changed in the file before; the superseded event is then
+    re-delivered, verbatim, one file after its revision, where only a
+    working event-id dedup keeps it from overwriting the revision. All
+    event times lie within a few minutes, inside any watermark. Returns
+    the latest change row per key (``MARKET_DIM_COLS`` order)."""
     os.makedirs(out_dir, exist_ok=True)
     n = n_files * per_file
     n_new = max(n // 100, 1)
     picks = rng.choice(len(market_ids), n - n_new, replace=False)
     keys = [market_ids[int(i)] for i in picks] + [f"mnew{j}" for j in range(n_new)]
     keys = [keys[int(i)] for i in rng.permutation(n)]
+    n_rev = max(int(per_file * REVISE_SHARE), 1)
+    stale: dict[int, list[int]] = {}  # file → superseded events re-delivered there
+    for k in range(1, n_files):
+        revised = rng.choice(range((k - 1) * per_file, k * per_file), n_rev, replace=False)
+        for slot, i in zip(range(k * per_file, k * per_file + n_rev), revised):
+            keys[slot] = keys[int(i)]
+        stale[k + 1] = [int(i) for i in revised]
     base = dt.datetime(2026, 3, 1)
-    rows = {}
-    for j, key in enumerate(keys):
-        rows[key] = (
+    events, rows = [], {}
+    for j, key in enumerate(keys):  # a later event for a key supersedes it
+        events.append((
             key, f"Updated question {j} for {key}?", _pick(rng, ["Match Winner", "Spread"]),
             int(rng.integers(1, 14)), f"{key}-v2", bool(rng.integers(0, 2)), False,
             base + dt.timedelta(days=int(rng.integers(1, 90))), '["Yes","No"]', "official",
             base, base + dt.timedelta(minutes=j),
-        )
+        ))
+        rows[key] = events[j]
     ts_type = pa.timestamp("us", tz="UTC")
     types = {
         "videojuego_id": pa.int32(), "esta_activo": pa.bool_(), "esta_cerrado": pa.bool_(),
@@ -431,14 +448,14 @@ def change_feed(
     base_mtime = 1_700_000_000
     for k in range(n_files):
         idx = list(range(k * per_file, (k + 1) * per_file))
-        again = rng.choice(idx, max(int(per_file * redeliver_share), 1), replace=False)
-        idx = sorted(idx + [int(i) for i in again])
+        again = rng.choice(idx, max(int(per_file * REDELIVER_SHARE), 1), replace=False)
+        idx = sorted(idx + [int(i) for i in again]) + stale.get(k, [])
         cols = {
             "event_id": pa.array(idx, pa.int64()),
-            "ts": pa.array([base + dt.timedelta(minutes=i) for i in idx], ts_type),
+            "ts": pa.array([base + dt.timedelta(seconds=i) for i in idx], ts_type),
         }
         for c_i, c in enumerate(MARKET_DIM_COLS):
-            cols[c] = pa.array([rows[keys[i]][c_i] for i in idx], types.get(c, pa.string()))
+            cols[c] = pa.array([events[i][c_i] for i in idx], types.get(c, pa.string()))
         path = os.path.join(out_dir, f"changes-{k:03d}.parquet")
         _write(pa.table(cols), path)
         os.utime(path, (base_mtime + k, base_mtime + k))

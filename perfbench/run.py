@@ -2,22 +2,24 @@
 
 Run from the repository root:
 
-    python3 perfbench/run.py --workload olap_mix --seed 1 --seconds 10 --trace 0
+    python3 perfbench/run.py --workload query_mix --seed 1 --seconds 13 --trace 0
 
 One process, one closed-loop client: a single SparkSession on
 ``local[<cpus>]`` runs the workload's ops back to back. The run
 
 1. generates the workload's inputs from ``--seed`` under a scratch
    directory (removed at exit);
-2. sets up the session several times (session start, registry import, one
-   warm-up op) and reports the median as ``setup_s``;
-3. checks the program's outputs outside the timed loop;
+2. sets up ``N_SETUPS`` times, each in a fresh process (package and
+   registry import, session start with its JVM launch, one warm-up op),
+   the last one being the run's own session, and reports the median as
+   ``setup_s``;
+3. checks the program's outputs outside the timed loop; this also runs
+   every op once cold, so the loop times warm ops;
 4. times ops for ``--seconds`` (a query pass or a lake cycle in progress
    is finished);
-5. with ``--trace 1``, runs the loop twice more: untraced, as the warm
-   baseline, then with spans recorded around every call into the program's
-   layers; reports per-layer numbers and the tracing overhead against that
-   baseline.
+5. with ``--trace 1``, runs the loop once more with spans recorded around
+   every call into the program's layers, and reports per-layer numbers and
+   the tracing overhead against the untraced loop.
 
 Human-readable lines go first; the last line of standard output is one
 JSON object: ``{"correct", "attempted", "failed", "metrics"}`` with the
@@ -33,6 +35,7 @@ import os
 import shutil
 import signal
 import statistics
+import subprocess
 import sys
 import time
 from pathlib import Path
@@ -132,10 +135,58 @@ def _stop_jvm(spark) -> None:
     SparkContext._jvm = None
 
 
+def _set_up(w, conf: dict[str, str]) -> tuple[object, float, float]:
+    """One set-up: package import, session start, registry import (timed
+    as ``start_s``), then one warm-up op (``warmup_s``)."""
+    t0 = time.perf_counter()
+    from ra2_datalake_linaresjoan_spark import queries
+    from ra2_datalake_linaresjoan_spark.session import get_spark
+
+    spark = get_spark(app_name=f"perfbench-{w.name}", extra_conf=conf)
+    queries.queries()
+    t1 = time.perf_counter()
+    w.warmup(spark)
+    return spark, t1 - t0, time.perf_counter() - t1
+
+
+def _probe_setups(args, tmp: Path) -> list[tuple[float, float]]:
+    """Set up ``N_SETUPS - 1`` times, each in a fresh process (JVM launch
+    and imports included), on the inputs the run generated."""
+    cmd = [sys.executable, str(Path(__file__).resolve()), "--workload", args.workload,
+           "--seed", str(args.seed), "--seconds", "0", "--setup-probe", str(tmp)]
+    if args.tiny:
+        cmd.append("--tiny")
+    out = []
+    for _ in range(N_SETUPS - 1):
+        with subprocess.Popen(cmd, cwd=ROOT, stdout=subprocess.PIPE, stderr=subprocess.PIPE,
+                              text=True) as p:
+            try:
+                stdout, stderr = p.communicate(timeout=170)
+            except BaseException:
+                # the probe stops its JVM on SIGTERM; wait for it to do so
+                p.terminate()
+                p.communicate()
+                raise
+        if p.returncode != 0:
+            raise RuntimeError(f"set-up probe exited {p.returncode}: {stderr[-500:]}")
+        probe = json.loads(stdout.strip().splitlines()[-1])
+        out.append((probe["start_s"], probe["warmup_s"]))
+    return out
+
+
+def setup_probe(args, tmp: Path) -> dict[str, float]:
+    w = WORKLOADS[args.workload](str(tmp / "data"), None, args.tiny, False)
+    spark = None
+    try:
+        spark, start_s, warmup_s = _set_up(w, _spark_conf(tmp))
+    finally:
+        if spark is not None:
+            _stop_jvm(spark)
+    return {"start_s": start_s, "warmup_s": warmup_s}
+
+
 def run(args, tmp: Path) -> tuple[dict, list[str]]:
     import numpy as np
-
-    from ra2_datalake_linaresjoan_spark.session import get_spark
 
     import layers
     from spans import RssSampler, Tracer
@@ -146,44 +197,33 @@ def run(args, tmp: Path) -> tuple[dict, list[str]]:
     w.prepare()
     phases = {"inputs": time.perf_counter() - t_run}
 
-    conf = _spark_conf(tmp)
-    starts, warmups = [], []
     sampler = None
     spark = None
     try:
-        for i in range(N_SETUPS):
-            t0 = time.perf_counter()
-            spark = get_spark(app_name=f"perfbench-{w.name}", extra_conf=conf)
-            from ra2_datalake_linaresjoan_spark import queries
-
-            queries.queries()
-            t1 = time.perf_counter()
-            w.warmup(spark)
-            starts.append(t1 - t0)
-            warmups.append(time.perf_counter() - t1)
-            if sampler is None:
-                jvm_pid = spark.sparkContext._jvm.java.lang.ProcessHandle.current().pid()
-                sampler = RssSampler(int(jvm_pid)).start()
-            if i < N_SETUPS - 1:
-                spark.stop()
+        t0 = time.perf_counter()
+        setups = _probe_setups(args, tmp)
+        spark, start_s, warmup_s = _set_up(w, _spark_conf(tmp))
+        setups.append((start_s, warmup_s))
+        phases["setups"] = time.perf_counter() - t0
+        jvm_pid = spark.sparkContext._jvm.java.lang.ProcessHandle.current().pid()
+        sampler = RssSampler(int(jvm_pid)).start()
 
         sc = spark.sparkContext
         lines = [
             f"host master={sc.master} defaultParallelism={sc.defaultParallelism} "
             f"driver_heap={spark.conf.get('spark.driver.memory')} workload={w.name} "
             f"seed={args.seed} seconds={args.seconds}",
+            "setups (fresh processes) start_s/warmup_s: "
+            + " ".join(f"{a:.3f}/{b:.3f}" for a, b in setups),
         ]
-        phases["setups"] = sum(starts) + sum(warmups)
         t0 = time.perf_counter()
         w.check(spark)
         phases["check"] = time.perf_counter() - t0
         t0 = time.perf_counter()
         ops, busy = _loop(w, spark, args.seconds)
         phases["loop"] = time.perf_counter() - t0
-        peak_rss = sampler.peak_bytes
-        setups = [a + b for a, b in zip(starts, warmups)]
         e2e = {
-            "setup_s": (_median(setups), "s"),
+            "setup_s": (_median([a + b for a, b in setups]), "s"),
             "op_p50_s": (_median([o.seconds for o in ops]), "s"),
             "ops_per_s": (len(ops) / busy, "1/s"),
             "rows_per_s": (sum(o.rows for o in ops) / busy, "rows/s"),
@@ -206,9 +246,7 @@ def run(args, tmp: Path) -> tuple[dict, list[str]]:
             lines.append(_phase_line(phases))
             return result, lines
 
-        t0 = time.perf_counter()
-        base_ops, _ = _loop(w, spark, args.seconds)
-        phases["baseline_loop"] = time.perf_counter() - t0
+        # the untraced loop above is the baseline of the tracing overhead
         t0 = time.perf_counter()
         tracer = Tracer(spark)
         tracer.install()
@@ -218,12 +256,13 @@ def run(args, tmp: Path) -> tuple[dict, list[str]]:
             tracer.uninstall()
         phases["traced_loop"] = time.perf_counter() - t0
         lines.append(_phase_line(phases))
-        t_failed = sum(1 for o in [*base_ops, *t_ops] if not o.ok)
+        t_failed = sum(1 for o in t_ops if not o.ok)
         result["correct"] = result["correct"] and not t_failed and not w.failures
         per_layer = layers.per_layer(
-            tracer.spans, t_ops, base_ops, starts, warmups, w.layer_extras()
+            tracer.spans, t_ops, ops, [a for a, _ in setups], [b for _, b in setups],
+            w.layer_extras(),
         )
-        per_layer["process.peak_rss_mb"] = (peak_rss / 2**20, "MB")
+        per_layer["process.peak_rss_mb"] = (sampler.peak_bytes / 2**20, "MB")
         out_dir = ROOT / ".perfbench" / "out"
         out_dir.mkdir(parents=True, exist_ok=True)
         trace_path = out_dir / f"trace-{w.name}-seed{args.seed}.json"
@@ -249,6 +288,8 @@ def main(argv=None) -> int:
     # program output that every check must catch
     ap.add_argument("--tiny", action="store_true", help=argparse.SUPPRESS)
     ap.add_argument("--inject-wrong", action="store_true", help=argparse.SUPPRESS)
+    # one set-up in this fresh process on a parent run's inputs (see _probe_setups)
+    ap.add_argument("--setup-probe", type=Path, help=argparse.SUPPRESS)
     args = ap.parse_args(argv)
 
     if not (ROOT / PKG / "__init__.py").is_file():
@@ -262,6 +303,11 @@ def main(argv=None) -> int:
 
     # a terminated run still stops its JVM and removes its scratch directory
     signal.signal(signal.SIGTERM, lambda *_: sys.exit(143))
+    if args.setup_probe is not None:
+        sys.path.insert(0, str(ROOT))
+        print(json.dumps(setup_probe(args, args.setup_probe)), flush=True)
+        return 0
+
     tmp = ROOT / ".perfbench" / f"run-{os.getpid()}"
     cpus, heap_mb = _host()
     _pin_env(tmp, cpus, heap_mb)

@@ -254,13 +254,16 @@ def self_times(spans: list[Span]) -> dict[int, float]:
     return {s.id: s.dur - child[s.id] for s in spans}
 
 
+#: seconds between RSS samples
+RSS_INTERVAL_S = 0.2
+
+
 class RssSampler:
     """Samples the summed RSS of a process and all its descendants (the
     driver JVM and the Python workers it forks) from /proc."""
 
-    def __init__(self, pid: int, interval_s: float = 0.2):
+    def __init__(self, pid: int):
         self.pid = pid
-        self.interval_s = interval_s
         self.peak_bytes = 0
         self._stop = threading.Event()
         self._thread = threading.Thread(target=self._run, daemon=True)
@@ -277,7 +280,7 @@ class RssSampler:
         page = os.sysconf("SC_PAGE_SIZE")
         while not self._stop.is_set():
             self.peak_bytes = max(self.peak_bytes, _tree_pages(self.pid) * page)
-            self._stop.wait(self.interval_s)
+            self._stop.wait(RSS_INTERVAL_S)
 
 
 def _tree_pages(root: int) -> int:

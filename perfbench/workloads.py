@@ -1,11 +1,11 @@
 """The benchmark's workloads.
 
 A workload generates its inputs from the run's seed (``prepare``), offers
-a small warm-up op for the set-up measurement (``warmup``), may check
-outputs and warm the JVM before the timed loop (``check``) and runs the
-timed loop in units (``unit``): one query or one lake cycle. A unit returns
-the ops it completed with their latencies and input rows; output checks
-inside a unit run after its clock stops.
+a small warm-up op for the set-up measurement (``warmup``), checks outputs
+and warms the JVM before the timed loop (``check``) and runs the timed
+loop in units (``unit``): one query or one lake cycle. A unit returns the
+ops it completed with their latencies and input rows; output checks inside
+a unit run after its clock stops.
 
 Each workload calls only the program's public entry points: the query
 registry, ``cli.run_pipeline``, ``sources.readers.read_table``,
@@ -17,14 +17,19 @@ from __future__ import annotations
 
 import os
 import shutil
+import sys
 import time
 from dataclasses import dataclass
+from pathlib import Path
 
 import numpy as np
 import pyarrow.parquet as pq
 
 import gen
-import oracle
+
+#: holds the repository's DuckDB comparison, ``oracle_harness.py``
+TESTS = Path(__file__).resolve().parent.parent / "tests"
+
 
 @dataclass
 class Op:
@@ -39,12 +44,28 @@ def _noop(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
+def _oracle_harness():
+    """Import the repository's oracle harness without writing bytecode
+    next to it."""
+    sys.path.insert(0, str(TESTS))
+    dont_write, sys.dont_write_bytecode = sys.dont_write_bytecode, True
+    try:
+        import oracle_harness
+    finally:
+        sys.dont_write_bytecode = dont_write
+        sys.path.remove(str(TESTS))
+    return oracle_harness
+
+
 class Workload:
-    """Base: ``root`` is a scratch directory owned by the run."""
+    """Base: ``root`` is a scratch directory owned by the run. Input paths
+    are fixed at construction, so a set-up probe in another process can
+    use inputs that ``prepare`` wrote."""
 
     name = ""
 
-    def __init__(self, root: str, rng: np.random.Generator, tiny: bool, inject_wrong: bool):
+    def __init__(self, root: str, rng: np.random.Generator | None, tiny: bool,
+                 inject_wrong: bool):
         self.root = root
         self.rng = rng
         self.tiny = tiny
@@ -58,7 +79,8 @@ class Workload:
         raise NotImplementedError
 
     def check(self, spark) -> None:
-        """Work before the timed loop (output checks, JIT warm-up)."""
+        """Work before the timed loop: output checks and JIT warm-up."""
+        raise NotImplementedError
 
     def unit(self, spark, k: int, tracer) -> tuple[list[Op], float]:
         """Run one unit; returns its ops and its wall time, which excludes
@@ -83,9 +105,11 @@ class Workload:
 class QueryMix(Workload):
     """Passes over a fixed set of registry queries, each pass in a seeded
     order; every op is one registry call plus a noop-sink action. The mix
-    holds relational queries (scan + aggregate, multi-way join, as-of join)
-    and LLM-data queries (fingerprint dedup, MinHash LSH, k-means) over the
-    same star-schema inputs."""
+    holds relational queries (scan + aggregate, multi-way join, as-of join,
+    interval join) and LLM-data queries (fingerprint dedup, MinHash LSH,
+    k-means) over the same star-schema inputs. The query count is odd, so
+    the median op falls inside one query's latencies, not in the gap
+    between two."""
 
     name = "query_mix"
     sf = 0.02
@@ -94,17 +118,21 @@ class QueryMix(Workload):
         "pricing_summary",
         "revenue_by_nation",
         "asof_join",
+        "interval_join",
         "exact_dedup_docs",
         "minhash_lsh",
         "semantic_kmeans",
     )
 
-    def prepare(self) -> None:
+    def __init__(self, *args):
+        super().__init__(*args)
         self.sf_dir = os.path.join(self.root, "tables")
-        self.rows = gen.star_tables(self.sf_dir, self.rng, 0.001 if self.tiny else self.sf)
         self.op_rows: dict[str, int] = {}
         self.wrong: dict[str, str] = {}
         self._order: list[str] = []
+
+    def prepare(self) -> None:
+        self.rows = gen.star_tables(self.sf_dir, self.rng, 0.001 if self.tiny else self.sf)
 
     def _registry(self):
         from ra2_datalake_linaresjoan_spark import queries as q
@@ -115,12 +143,14 @@ class QueryMix(Workload):
         _noop(self._registry()[self.warmup_query](spark, self.sf_dir))
 
     def check(self, spark) -> None:
-        """Collect each query once and compare it with its DuckDB oracle.
-        Doubles as the JIT warm-up of every query in the mix."""
+        """Collect each query once and compare it with its DuckDB oracle,
+        then run one untimed pass: the first noop-sink run of a query is
+        still 10-25 % slower than later ones (JIT)."""
         from ra2_datalake_linaresjoan_spark import queries as q
 
+        harness = _oracle_harness()
         registry, sqls = q.queries(), q.oracle_sql()
-        con = oracle.connect(self.sf_dir, self.rows)
+        con = harness.duck_con(self.sf_dir)
         try:
             for name in self.queries:
                 try:
@@ -128,17 +158,19 @@ class QueryMix(Workload):
                     self.op_rows[name] = sum(
                         self.rows[_table_of(f)] for f in set(df.inputFiles())
                     )
-                    rows = [tuple(r) for r in df.collect()]
                     if self.inject_wrong:
-                        rows = rows[1:] if rows else [tuple([None] * len(df.columns))]
-                    reason = oracle.compare(df.columns, rows, con, sqls[name])
+                        df = df.limit(max(df.count() - 1, 0))
+                    ok, reason = harness.compare(df, con, sqls[name])
                 except Exception as e:  # reported as a mismatch, the run goes on
-                    reason = f"{type(e).__name__}: {e}"[:300]
-                if reason:
-                    self.wrong[name] = reason
-                    self._fail(f"{name}: {reason}")
+                    ok, reason = False, f"{type(e).__name__}: {e}"
+                if not ok:
+                    self.wrong[name] = " ".join(reason.split())[:300]
+                    self._fail(f"{name}: {self.wrong[name]}")
         finally:
             con.close()
+        for name in self.queries:
+            if name not in self.wrong:
+                _noop(registry[name](spark, self.sf_dir))
 
     def unit(self, spark, k: int, tracer) -> tuple[list[Op], float]:
         if not self._order:
@@ -196,20 +228,26 @@ class MedallionLoad(Workload):
        (``streaming.foreach_sink.stream_merge_sink`` →
        ``sources.upsert.merge_upsert``).
 
-    The cycle is timed as the pipeline CLI runs it: one cycle per process,
-    right after session set-up. A cycle is ~150 Spark jobs, and that first
-    one takes about 1.5x a warm one (JIT and code generation); timing warm
-    cycles instead would add an untimed cold one, ~35 s, to every run."""
+    A cycle is ~200 Spark jobs; the first one in a process takes about
+    1.8x a warm one (JIT and code generation). ``check`` runs that cold
+    cycle untimed, so the loop times warm cycles."""
 
     name = "medallion_load"
     n_markets = 4_000
     feed_files = 3
     feed_per_file = 60
 
-    def prepare(self) -> None:
-        n_markets = 400 if self.tiny else self.n_markets
+    def __init__(self, *args):
+        super().__init__(*args)
         self.bronze = os.path.join(self.root, "bronze")
         self.feed = os.path.join(self.root, "feed")
+        self.progress: list[dict] = []
+        self.stored: list[float] = []
+        self.written: list[tuple[int, int]] = []
+        self.rewrite: list[float] = []
+
+    def prepare(self) -> None:
+        n_markets = 400 if self.tiny else self.n_markets
         self.rows = sum(gen.bronze_lake(self.bronze, self.rng, n_markets).values())
         self.changes = gen.change_feed(
             self.feed, self.rng, [f"m{i}" for i in range(n_markets)], self.feed_files,
@@ -218,10 +256,6 @@ class MedallionLoad(Workload):
         self.rows += sum(
             pq.read_metadata(os.path.join(self.feed, f)).num_rows for f in os.listdir(self.feed)
         )
-        self.progress: list[dict] = []
-        self.stored: list[float] = []
-        self.written: list[tuple[int, int]] = []
-        self.rewrite: list[float] = []
 
     def _read(self, spark):
         from ra2_datalake_linaresjoan_spark.sources.readers import read_table
@@ -236,7 +270,16 @@ class MedallionLoad(Workload):
         for df in self._read(spark):
             _noop(df)
 
+    def check(self, spark) -> None:
+        """The cold cycle, untimed; its outputs are checked like every
+        timed cycle's."""
+        self._cycle(spark, "cold", None)
+
     def unit(self, spark, k: int, tracer) -> tuple[list[Op], float]:
+        op = self._cycle(spark, str(k), tracer)
+        return [op], op.seconds
+
+    def _cycle(self, spark, tag: str, tracer) -> Op:
         from ra2_datalake_linaresjoan_spark import cli
         from ra2_datalake_linaresjoan_spark.streaming.foreach_sink import stream_merge_sink
         from ra2_datalake_linaresjoan_spark.streaming.windows import (
@@ -244,7 +287,7 @@ class MedallionLoad(Workload):
             stream_dedup,
         )
 
-        lake = os.path.join(self.root, f"lake{k}")
+        lake = os.path.join(self.root, f"lake-{tag}")
         silver, gold = os.path.join(lake, "silver"), os.path.join(lake, "gold")
         dim = os.path.join(gold, "dim_mercado_gaming")
         t0 = time.perf_counter()
@@ -285,16 +328,18 @@ class MedallionLoad(Workload):
                 tracer.end(span)
         op = Op("cycle", t_batch + time.perf_counter() - t1, self.rows)
         # outside the op's latency: output checks and storage accounting
+        batches = [p for p in q.recentProgress if p["numInputRows"]]
         counts = out["validation"]["counts"]
-        for fact in ("fact_mercado_evento_gaming", "fact_evento_tag_gaming"):
-            if counts.get(fact, 0) == 0:
-                op.ok, op.error = False, f"{fact} is empty"
+        reasons = [f"{fact} is empty" for fact in
+                   ("fact_mercado_evento_gaming", "fact_evento_tag_gaming")
+                   if counts.get(fact, 0) == 0]
         reason = self._check_dim(spark, dim, before)
         if reason:
-            op.ok, op.error = False, reason
-        if not op.ok:
-            self._fail(f"cycle {k}: {op.error}")
-        self.progress += [p for p in q.recentProgress if p["numInputRows"]]
+            reasons.append(reason)
+        if reasons:
+            op.ok, op.error = False, "; ".join(reasons)
+            self._fail(f"cycle {tag}: {op.error}")
+        self.progress += batches
         b_silver, f_silver = _tree_bytes(silver)
         b_gold, f_gold = _tree_bytes(gold)
         self.stored.append((b_silver + b_gold) / _tree_bytes(self.bronze)[0])
@@ -303,11 +348,17 @@ class MedallionLoad(Workload):
         changed = before_bytes * len(self.changes) / max(len(before), 1)
         self.rewrite.append(self.feed_files * _tree_bytes(dim)[0] / max(changed, 1.0))
         shutil.rmtree(lake, ignore_errors=True)
-        return [op], op.seconds
+        return op
 
     def _check_dim(self, spark, dim: str, before: dict) -> str | None:
-        """Change rows win on their keys, every other row is untouched."""
-        got = {r["mercado_id"]: r for r in spark.read.parquet(dim).collect()}
+        """Each key's latest change row wins (a superseded event that is
+        re-delivered after its revision must have been dropped by the
+        dedup), every other row is untouched, and each key is stored
+        once."""
+        rows = spark.read.parquet(dim).collect()
+        got = {r["mercado_id"]: r for r in rows}
+        if len(rows) != len(got):
+            return f"dimension holds {len(rows)} rows for {len(got)} keys"
         want = {k: v.asDict() for k, v in before.items()}
         for key, row in self.changes.items():
             want[key] = dict(zip(gen.MARKET_DIM_COLS, row))
