@@ -31,8 +31,8 @@ STAGES = {
 #: numbers a workload measures itself; 0 where it has none
 EXTRAS = {
     "storage.stored_bytes_per_input_byte": "ratio",
-    "storage.bytes_written_per_op": "B",
-    "storage.files_written_per_op": "count",
+    "storage.bytes_written_per_pass": "B",
+    "storage.files_written_per_pass": "count",
     "sources.upsert_rewrite_ratio": "ratio",
     "streaming.add_batch_pct": "%",
     "streaming.query_planning_pct": "%",
@@ -59,7 +59,7 @@ def _sum(spans: list[Span], key: str) -> float:
     return sum(s.counters.get(key, 0.0) for s in spans)
 
 
-def per_layer(spans, t_ops, base_ops, starts, warmups, extras) -> dict[str, tuple[float, str]]:
+def per_layer(spans, t_ops, base_ops, start_s, warmup_s, extras) -> dict[str, tuple[float, str]]:
     """Name → (value, unit) for every per-layer metric. ``t_ops`` are the
     traced loop's ops, ``base_ops`` the untraced baseline loop's."""
     roots = [s for s in spans if s.parent is None]
@@ -68,8 +68,8 @@ def per_layer(spans, t_ops, base_ops, starts, warmups, extras) -> dict[str, tupl
     self_t = self_times(spans)
     pct = lambda x: 100.0 * x / base  # noqa: E731
     m: dict[str, tuple[float, str]] = {
-        "session.start_s": (statistics.median(starts), "s"),
-        "session.warmup_s": (statistics.median(warmups), "s"),
+        "session.start_s": (start_s, "s"),
+        "session.warmup_s": (warmup_s, "s"),
         "trace.op_p50_s": (statistics.median(o.seconds for o in t_ops), "s"),
         "trace.overhead_pct": (
             100.0 * (

@@ -2,22 +2,21 @@
 
 Run from the repository root:
 
-    python3 perfbench/run.py --workload query_mix --seed 1 --seconds 13 --trace 0
+    python3 perfbench/run.py --workload query_mix --seed 1 --seconds 10 --trace 0
 
 One process, one closed-loop client: a single SparkSession on
 ``local[<cpus>]`` runs the workload's ops back to back. The run
 
 1. generates the workload's inputs from ``--seed`` under a scratch
    directory (removed at exit);
-2. sets up ``N_SETUPS`` times, each in a fresh process (package and
-   registry import, session start with its JVM launch, one warm-up op),
-   the last one being the run's own session, and reports the median as
-   ``setup_s``;
-3. checks the program's outputs outside the timed loop; this also runs
-   every op once cold, so the loop times warm ops;
-4. times ops for ``--seconds`` (a query pass or a lake cycle in progress
-   is finished);
-5. with ``--trace 1``, runs the loop once more with spans recorded around
+2. sets up once, in this fresh process: package and registry import and
+   session start with its JVM launch (``session.start_s``), then one cold
+   pass over every op with its outputs checked (``session.warmup_s``, the
+   program's time only); ``setup_s`` is their sum. One cold set-up is all
+   a run can afford: the medallion's cold pass alone takes 20-35 s on a
+   4-vCPU host;
+3. times warm ops for ``--seconds`` (a pass in progress is finished);
+4. with ``--trace 1``, runs the loop once more with spans recorded around
    every call into the program's layers, and reports per-layer numbers and
    the tracing overhead against the untraced loop.
 
@@ -35,7 +34,6 @@ import os
 import shutil
 import signal
 import statistics
-import subprocess
 import sys
 import time
 from pathlib import Path
@@ -43,7 +41,6 @@ from pathlib import Path
 HERE = Path(__file__).resolve().parent
 ROOT = HERE.parent
 PKG = "ra2_datalake_linaresjoan_spark"
-N_SETUPS = 3
 
 sys.path.insert(0, str(HERE))
 
@@ -135,56 +132,6 @@ def _stop_jvm(spark) -> None:
     SparkContext._jvm = None
 
 
-def _set_up(w, conf: dict[str, str]) -> tuple[object, float, float]:
-    """One set-up: package import, session start, registry import (timed
-    as ``start_s``), then one warm-up op (``warmup_s``)."""
-    t0 = time.perf_counter()
-    from ra2_datalake_linaresjoan_spark import queries
-    from ra2_datalake_linaresjoan_spark.session import get_spark
-
-    spark = get_spark(app_name=f"perfbench-{w.name}", extra_conf=conf)
-    queries.queries()
-    t1 = time.perf_counter()
-    w.warmup(spark)
-    return spark, t1 - t0, time.perf_counter() - t1
-
-
-def _probe_setups(args, tmp: Path) -> list[tuple[float, float]]:
-    """Set up ``N_SETUPS - 1`` times, each in a fresh process (JVM launch
-    and imports included), on the inputs the run generated."""
-    cmd = [sys.executable, str(Path(__file__).resolve()), "--workload", args.workload,
-           "--seed", str(args.seed), "--seconds", "0", "--setup-probe", str(tmp)]
-    if args.tiny:
-        cmd.append("--tiny")
-    out = []
-    for _ in range(N_SETUPS - 1):
-        with subprocess.Popen(cmd, cwd=ROOT, stdout=subprocess.PIPE, stderr=subprocess.PIPE,
-                              text=True) as p:
-            try:
-                stdout, stderr = p.communicate(timeout=170)
-            except BaseException:
-                # the probe stops its JVM on SIGTERM; wait for it to do so
-                p.terminate()
-                p.communicate()
-                raise
-        if p.returncode != 0:
-            raise RuntimeError(f"set-up probe exited {p.returncode}: {stderr[-500:]}")
-        probe = json.loads(stdout.strip().splitlines()[-1])
-        out.append((probe["start_s"], probe["warmup_s"]))
-    return out
-
-
-def setup_probe(args, tmp: Path) -> dict[str, float]:
-    w = WORKLOADS[args.workload](str(tmp / "data"), None, args.tiny, False)
-    spark = None
-    try:
-        spark, start_s, warmup_s = _set_up(w, _spark_conf(tmp))
-    finally:
-        if spark is not None:
-            _stop_jvm(spark)
-    return {"start_s": start_s, "warmup_s": warmup_s}
-
-
 def run(args, tmp: Path) -> tuple[dict, list[str]]:
     import numpy as np
 
@@ -201,29 +148,30 @@ def run(args, tmp: Path) -> tuple[dict, list[str]]:
     spark = None
     try:
         t0 = time.perf_counter()
-        setups = _probe_setups(args, tmp)
-        spark, start_s, warmup_s = _set_up(w, _spark_conf(tmp))
-        setups.append((start_s, warmup_s))
-        phases["setups"] = time.perf_counter() - t0
+        from ra2_datalake_linaresjoan_spark import queries
+        from ra2_datalake_linaresjoan_spark.session import get_spark
+
+        spark = get_spark(app_name=f"perfbench-{w.name}", extra_conf=_spark_conf(tmp))
+        queries.queries()
+        start_s = time.perf_counter() - t0
         jvm_pid = spark.sparkContext._jvm.java.lang.ProcessHandle.current().pid()
         sampler = RssSampler(int(jvm_pid)).start()
+        t0 = time.perf_counter()
+        warmup_s = w.cold_pass(spark)
+        phases["setup"] = time.perf_counter() - t0 + start_s
 
         sc = spark.sparkContext
         lines = [
             f"host master={sc.master} defaultParallelism={sc.defaultParallelism} "
             f"driver_heap={spark.conf.get('spark.driver.memory')} workload={w.name} "
             f"seed={args.seed} seconds={args.seconds}",
-            "setups (fresh processes) start_s/warmup_s: "
-            + " ".join(f"{a:.3f}/{b:.3f}" for a, b in setups),
+            f"setup start_s={start_s:.3f} warmup_s={warmup_s:.3f} (cold pass, program time)",
         ]
-        t0 = time.perf_counter()
-        w.check(spark)
-        phases["check"] = time.perf_counter() - t0
         t0 = time.perf_counter()
         ops, busy = _loop(w, spark, args.seconds)
         phases["loop"] = time.perf_counter() - t0
         e2e = {
-            "setup_s": (_median([a + b for a, b in setups]), "s"),
+            "setup_s": (start_s + warmup_s, "s"),
             "op_p50_s": (_median([o.seconds for o in ops]), "s"),
             "ops_per_s": (len(ops) / busy, "1/s"),
             "rows_per_s": (sum(o.rows for o in ops) / busy, "rows/s"),
@@ -259,8 +207,7 @@ def run(args, tmp: Path) -> tuple[dict, list[str]]:
         t_failed = sum(1 for o in t_ops if not o.ok)
         result["correct"] = result["correct"] and not t_failed and not w.failures
         per_layer = layers.per_layer(
-            tracer.spans, t_ops, ops, [a for a, _ in setups], [b for _, b in setups],
-            w.layer_extras(),
+            tracer.spans, t_ops, ops, start_s, warmup_s, w.layer_extras(),
         )
         per_layer["process.peak_rss_mb"] = (sampler.peak_bytes / 2**20, "MB")
         out_dir = ROOT / ".perfbench" / "out"
@@ -288,8 +235,6 @@ def main(argv=None) -> int:
     # program output that every check must catch
     ap.add_argument("--tiny", action="store_true", help=argparse.SUPPRESS)
     ap.add_argument("--inject-wrong", action="store_true", help=argparse.SUPPRESS)
-    # one set-up in this fresh process on a parent run's inputs (see _probe_setups)
-    ap.add_argument("--setup-probe", type=Path, help=argparse.SUPPRESS)
     args = ap.parse_args(argv)
 
     if not (ROOT / PKG / "__init__.py").is_file():
@@ -303,11 +248,6 @@ def main(argv=None) -> int:
 
     # a terminated run still stops its JVM and removes its scratch directory
     signal.signal(signal.SIGTERM, lambda *_: sys.exit(143))
-    if args.setup_probe is not None:
-        sys.path.insert(0, str(ROOT))
-        print(json.dumps(setup_probe(args, args.setup_probe)), flush=True)
-        return 0
-
     tmp = ROOT / ".perfbench" / f"run-{os.getpid()}"
     cpus, heap_mb = _host()
     _pin_env(tmp, cpus, heap_mb)

@@ -1,16 +1,16 @@
 """The benchmark's workloads.
 
-A workload generates its inputs from the run's seed (``prepare``), offers
-a small warm-up op for the set-up measurement (``warmup``), checks outputs
-and warms the JVM before the timed loop (``check``) and runs the timed
-loop in units (``unit``): one query or one lake cycle. A unit returns the
-ops it completed with their latencies and input rows; output checks inside
-a unit run after its clock stops.
+A workload generates its inputs from the run's seed (``prepare``), runs
+every op once cold as the last step of the set-up (``cold_pass``, which
+also checks outputs; only the program's time counts toward the set-up)
+and runs the timed loop in units (``unit``): one query or one lake stage.
+A unit returns the ops it completed with their latencies and input rows;
+output checks inside a unit run after its clock stops.
 
 Each workload calls only the program's public entry points: the query
-registry, ``cli.run_pipeline``, ``sources.readers.read_table``,
-``streaming.windows`` and ``streaming.foreach_sink`` (which calls
-``sources.upsert.merge_upsert``).
+registry, ``sources.readers.read_table``, the ``plans`` stages that
+``cli.run_pipeline`` chains, ``streaming.windows`` and
+``streaming.foreach_sink`` (which calls ``sources.upsert.merge_upsert``).
 """
 
 from __future__ import annotations
@@ -57,15 +57,28 @@ def _oracle_harness():
     return oracle_harness
 
 
+class _TimedCollect:
+    """Hands ``oracle_harness.compare`` a DataFrame's columns and rows and
+    times the collect, so the DuckDB side is left out of the set-up time."""
+
+    def __init__(self, df):
+        self.df = df
+        self.columns = df.columns
+        self.seconds = 0.0
+
+    def collect(self):
+        t0 = time.perf_counter()
+        rows = self.df.collect()
+        self.seconds = time.perf_counter() - t0
+        return rows
+
+
 class Workload:
-    """Base: ``root`` is a scratch directory owned by the run. Input paths
-    are fixed at construction, so a set-up probe in another process can
-    use inputs that ``prepare`` wrote."""
+    """Base: ``root`` is a scratch directory owned by the run."""
 
     name = ""
 
-    def __init__(self, root: str, rng: np.random.Generator | None, tiny: bool,
-                 inject_wrong: bool):
+    def __init__(self, root: str, rng: np.random.Generator, tiny: bool, inject_wrong: bool):
         self.root = root
         self.rng = rng
         self.tiny = tiny
@@ -75,11 +88,9 @@ class Workload:
     def prepare(self) -> None:
         raise NotImplementedError
 
-    def warmup(self, spark) -> None:
-        raise NotImplementedError
-
-    def check(self, spark) -> None:
-        """Work before the timed loop: output checks and JIT warm-up."""
+    def cold_pass(self, spark) -> float:
+        """Run every op once, cold, and check its output; returns the time
+        spent in the program (the set-up's warm-up)."""
         raise NotImplementedError
 
     def unit(self, spark, k: int, tracer) -> tuple[list[Op], float]:
@@ -108,12 +119,13 @@ class QueryMix(Workload):
     holds relational queries (scan + aggregate, multi-way join, as-of join,
     interval join) and LLM-data queries (fingerprint dedup, MinHash LSH,
     k-means) over the same star-schema inputs. The query count is odd, so
-    the median op falls inside one query's latencies, not in the gap
-    between two."""
+    the median op falls inside the latencies of the middle queries
+    (``pricing_summary``, ``asof_join``, ``interval_join``: 0.4-0.8 s on a
+    4-vCPU host), not in a gap between two; a mix whose middle is one
+    query makes the median as noisy as that query."""
 
     name = "query_mix"
     sf = 0.02
-    warmup_query = "top_orders"
     queries = (
         "pricing_summary",
         "revenue_by_nation",
@@ -139,28 +151,29 @@ class QueryMix(Workload):
 
         return q.queries()
 
-    def warmup(self, spark) -> None:
-        _noop(self._registry()[self.warmup_query](spark, self.sf_dir))
-
-    def check(self, spark) -> None:
-        """Collect each query once and compare it with its DuckDB oracle,
-        then run one untimed pass: the first noop-sink run of a query is
-        still 10-25 % slower than later ones (JIT)."""
+    def cold_pass(self, spark) -> float:
+        """Collect each query once and compare it with its DuckDB oracle;
+        returns the summed registry-call and collect time."""
         from ra2_datalake_linaresjoan_spark import queries as q
 
         harness = _oracle_harness()
         registry, sqls = q.queries(), q.oracle_sql()
         con = harness.duck_con(self.sf_dir)
+        spent = 0.0
         try:
             for name in self.queries:
                 try:
+                    t0 = time.perf_counter()
                     df = registry[name](spark, self.sf_dir)
+                    spent += time.perf_counter() - t0
                     self.op_rows[name] = sum(
                         self.rows[_table_of(f)] for f in set(df.inputFiles())
                     )
                     if self.inject_wrong:
                         df = df.limit(max(df.count() - 1, 0))
-                    ok, reason = harness.compare(df, con, sqls[name])
+                    rows = _TimedCollect(df)
+                    ok, reason = harness.compare(rows, con, sqls[name])
+                    spent += rows.seconds
                 except Exception as e:  # reported as a mismatch, the run goes on
                     ok, reason = False, f"{type(e).__name__}: {e}"
                 if not ok:
@@ -168,9 +181,7 @@ class QueryMix(Workload):
                     self._fail(f"{name}: {self.wrong[name]}")
         finally:
             con.close()
-        for name in self.queries:
-            if name not in self.wrong:
-                _noop(registry[name](spark, self.sf_dir))
+        return spent
 
     def unit(self, spark, k: int, tracer) -> tuple[list[Op], float]:
         if not self._order:
@@ -214,33 +225,51 @@ def _tree_bytes(path: str) -> tuple[int, int]:
 
 # --- medallion load --------------------------------------------------------
 
+_SILVER = ("markets", "events", "series")
+
 
 class MedallionLoad(Workload):
-    """Each op is one lake cycle into a fresh lake directory.
+    """Passes over the lake's stages, each pass into a fresh lake
+    directory; every op is one stage. The first four stages call the
+    program's public functions in the order ``cli.run_pipeline`` calls them
+    with ``silver_path`` and ``gold_path`` set:
 
-    1. Batch: bronze read (``sources.readers.read_table``) →
-       ``cli.run_pipeline``: silver and gold parquet writes, gold
-       validation (many small actions) and volumetry.
-    2. Stream: the gold market dimension's change feed arrives as files;
-       an availableNow stream at one file per trigger drops re-delivered
-       events (``streaming.windows.stream_dedup``, checkpointed state) and
-       merges every micro-batch into the dimension
+    1. ``silver``: bronze read (``sources.readers.read_table``) →
+       ``clean_markets`` → ``gaming_market_filter`` →
+       ``enrich_gaming_markets``, ``clean_events``, ``clean_series`` →
+       silver parquet.
+    2. ``gold``: ``build_gold`` over the silver tables → ``write_gold``.
+    3. ``validate``: ``validate_gold`` over the gold tables (about 60 small
+       actions); it must pass with non-empty bridge facts.
+    4. ``report``: ``volumetry_report`` and ``gaming_summary``.
+    5. ``stream``: the gold market dimension's change feed arrives as
+       files; an availableNow stream at one file per trigger drops
+       re-delivered events (``streaming.windows.stream_dedup``,
+       checkpointed state) and merges every micro-batch into the dimension
        (``streaming.foreach_sink.stream_merge_sink`` →
        ``sources.upsert.merge_upsert``).
 
-    A cycle is ~200 Spark jobs; the first one in a process takes about
-    1.8x a warm one (JIT and code generation). ``check`` runs that cold
-    cycle untimed, so the loop times warm cycles."""
+    A pass is about 200 Spark jobs and takes 8-20 s warm on a 4-vCPU
+    host, so timing whole passes would give one sample per run; stage ops
+    give five. ``rows`` are the inputs a stage reads from outside the
+    lake: bronze rows for ``silver``, change-feed rows for ``stream``."""
 
     name = "medallion_load"
-    n_markets = 4_000
+    n_markets = 1_000
     feed_files = 3
     feed_per_file = 60
+    stages = ("silver", "gold", "validate", "report", "stream")
 
     def __init__(self, *args):
         super().__init__(*args)
         self.bronze = os.path.join(self.root, "bronze")
         self.feed = os.path.join(self.root, "feed")
+        self.lake = os.path.join(self.root, "lake")
+        self.silver = os.path.join(self.lake, "silver")
+        self.gold = os.path.join(self.lake, "gold")
+        self.dim = os.path.join(self.gold, "dim_mercado_gaming")
+        self._next = 0
+        self._gold_names: list[str] = []
         self.progress: list[dict] = []
         self.stored: list[float] = []
         self.written: list[tuple[int, int]] = []
@@ -248,114 +277,158 @@ class MedallionLoad(Workload):
 
     def prepare(self) -> None:
         n_markets = 400 if self.tiny else self.n_markets
-        self.rows = sum(gen.bronze_lake(self.bronze, self.rng, n_markets).values())
+        self.bronze_rows = sum(gen.bronze_lake(self.bronze, self.rng, n_markets).values())
         self.changes = gen.change_feed(
             self.feed, self.rng, [f"m{i}" for i in range(n_markets)], self.feed_files,
             self.feed_per_file,
         )
-        self.rows += sum(
+        self.feed_rows = sum(
             pq.read_metadata(os.path.join(self.feed, f)).num_rows for f in os.listdir(self.feed)
         )
 
-    def _read(self, spark):
-        from ra2_datalake_linaresjoan_spark.sources.readers import read_table
-
-        return [
-            read_table(spark, os.path.join(self.bronze, f"{e}.parquet"))
-            for e in ("markets", "events", "series")
-        ]
-
-    def warmup(self, spark) -> None:
-        # one bronze scan through the reader; a full cycle is the op itself
-        for df in self._read(spark):
-            _noop(df)
-
-    def check(self, spark) -> None:
-        """The cold cycle, untimed; its outputs are checked like every
-        timed cycle's."""
-        self._cycle(spark, "cold", None)
+    def cold_pass(self, spark) -> float:
+        ops = [self.unit(spark, k, None)[0][0] for k in range(len(self.stages))]
+        return sum(o.seconds for o in ops)
 
     def unit(self, spark, k: int, tracer) -> tuple[list[Op], float]:
-        op = self._cycle(spark, str(k), tracer)
+        stage = self.stages[self._next]
+        self._next = (self._next + 1) % len(self.stages)
+        op = getattr(self, f"_{stage}")(spark, tracer)
+        if op.error:
+            op.ok = False
+            self._fail(f"{stage} (unit {k}): {op.error}")
         return [op], op.seconds
 
-    def _cycle(self, spark, tag: str, tracer) -> Op:
-        from ra2_datalake_linaresjoan_spark import cli
+    def pass_done(self) -> bool:
+        return self._next == 0
+
+    def _timed(self, tracer, stage: str, fn):
+        """``fn()`` and its wall time; a root span when traced."""
+        span = tracer.begin(f"medallion.{stage}", "bench") if tracer else None
+        t0 = time.perf_counter()
+        try:
+            out = fn()
+        finally:
+            dt = time.perf_counter() - t0
+            if span is not None:
+                tracer.end(span)
+        return out, dt
+
+    def _tables(self, spark, base: str, names) -> dict:
+        return {n: spark.read.parquet(os.path.join(base, n)) for n in names}
+
+    def _silver(self, spark, tracer) -> Op:
+        from ra2_datalake_linaresjoan_spark.plans import pipelines as p
+        from ra2_datalake_linaresjoan_spark.sources import readers
+
+        shutil.rmtree(self.lake, ignore_errors=True)
+
+        def run():
+            markets, events, series = (
+                readers.read_table(spark, os.path.join(self.bronze, f"{e}.parquet"))
+                for e in _SILVER
+            )
+            m = p.enrich_gaming_markets(p.gaming_market_filter(p.clean_markets(markets)))
+            for name, df in zip(_SILVER, (m, p.clean_events(events), p.clean_series(series))):
+                df.write.mode("overwrite").parquet(os.path.join(self.silver, name))
+
+        _, dt = self._timed(tracer, "silver", run)
+        return Op("silver", dt, self.bronze_rows)
+
+    def _gold(self, spark, tracer) -> Op:
+        from ra2_datalake_linaresjoan_spark.plans import star_schema
+
+        def run():
+            gold = star_schema.build_gold(spark, *self._tables(spark, self.silver, _SILVER).values())
+            star_schema.write_gold(gold, self.gold)
+            return list(gold)
+
+        self._gold_names, dt = self._timed(tracer, "gold", run)
+        b_silver, f_silver = _tree_bytes(self.silver)
+        b_gold, f_gold = _tree_bytes(self.gold)
+        self.stored.append((b_silver + b_gold) / _tree_bytes(self.bronze)[0])
+        self.written.append((b_silver + b_gold, f_silver + f_gold))
+        return Op("gold", dt, 0)
+
+    def _validate(self, spark, tracer) -> Op:
+        from ra2_datalake_linaresjoan_spark.plans import validator
+
+        def run():
+            return validator.validate_gold(self._tables(spark, self.gold, self._gold_names))
+
+        report, dt = self._timed(tracer, "validate", run)
+        reasons = [] if report.ok else [f"gold integrity failed: {report.orphans}"]
+        reasons += [f"{fact} is empty" for fact in
+                    ("fact_mercado_evento_gaming", "fact_evento_tag_gaming")
+                    if report.counts.get(fact, 0) == 0]
+        return Op("validate", dt, 0, error="; ".join(reasons))
+
+    def _report(self, spark, tracer) -> Op:
+        from ra2_datalake_linaresjoan_spark.plans import pipelines, volumetry
+
+        def run():
+            silver = self._tables(spark, self.silver, _SILVER)
+            gold = self._tables(
+                spark, self.gold, ("fact_mercado_evento_gaming", "fact_evento_tag_gaming")
+            )
+            vol = volumetry.volumetry_report(
+                silver,
+                {
+                    "markets_per_event": (
+                        gold["fact_mercado_evento_gaming"], "evento_id", "mercado_id"
+                    ),
+                    "events_per_tag": (gold["fact_evento_tag_gaming"], "tag_id", "evento_id"),
+                },
+            )
+            return vol, pipelines.gaming_summary(silver["markets"]).collect()
+
+        (vol, summary), dt = self._timed(tracer, "report", run)
+        error = "" if vol and summary else "empty volumetry report or gaming summary"
+        return Op("report", dt, 0, error=error)
+
+    def _stream(self, spark, tracer) -> Op:
         from ra2_datalake_linaresjoan_spark.streaming.foreach_sink import stream_merge_sink
         from ra2_datalake_linaresjoan_spark.streaming.windows import (
             read_events_stream,
             stream_dedup,
         )
 
-        lake = os.path.join(self.root, f"lake-{tag}")
-        silver, gold = os.path.join(lake, "silver"), os.path.join(lake, "gold")
-        dim = os.path.join(gold, "dim_mercado_gaming")
-        t0 = time.perf_counter()
-        span = tracer.begin("medallion.batch", "bench") if tracer else None
-        try:
-            markets, events, series = self._read(spark)
-            out = cli.run_pipeline(
-                spark, markets, events, series, gold_path=gold, silver_path=silver
-            )
-        finally:
-            if span is not None:
-                tracer.end(span)
-        t_batch = time.perf_counter() - t0
-        # clock stopped: snapshot the dimension, deliver the change feed
-        before = {r["mercado_id"]: r for r in spark.read.parquet(dim).collect()}
-        before_bytes = _tree_bytes(dim)[0]
-        feed = os.path.join(lake, "feed")
+        # before the clock: snapshot the dimension, deliver the change feed
+        before = {r["mercado_id"]: r for r in spark.read.parquet(self.dim).collect()}
+        before_bytes = _tree_bytes(self.dim)[0]
+        feed = os.path.join(self.lake, "feed")
         shutil.copytree(self.feed, feed)  # copy2 keeps the arrival order (mtimes)
-        t1 = time.perf_counter()
-        span = tracer.begin("medallion.stream", "bench") if tracer else None
-        try:
+
+        def run():
             changes = stream_dedup(read_events_stream(spark, feed, max_files_per_trigger=1))
             q = stream_merge_sink(
-                changes.drop("event_id", "ts"), dim, ["mercado_id"],
-                os.path.join(lake, "_checkpoint"), output_mode="append",
+                changes.drop("event_id", "ts"), self.dim, ["mercado_id"],
+                os.path.join(self.lake, "_checkpoint"), output_mode="append",
             )
             # the micro-batches run while the caller waits: charge the wait
             # (and the stream's own jobs) to the streaming layer
-            run = tracer.begin("streaming.query_run", "streaming") if tracer else None
+            wait = tracer.begin("streaming.query_run", "streaming") if tracer else None
             try:
                 q.awaitTermination()
             finally:
-                if run is not None:
-                    tracer.end(run)
-                    run.groups.append(str(q.runId))
-        finally:
-            if span is not None:
-                tracer.end(span)
-        op = Op("cycle", t_batch + time.perf_counter() - t1, self.rows)
-        # outside the op's latency: output checks and storage accounting
-        batches = [p for p in q.recentProgress if p["numInputRows"]]
-        counts = out["validation"]["counts"]
-        reasons = [f"{fact} is empty" for fact in
-                   ("fact_mercado_evento_gaming", "fact_evento_tag_gaming")
-                   if counts.get(fact, 0) == 0]
-        reason = self._check_dim(spark, dim, before)
-        if reason:
-            reasons.append(reason)
-        if reasons:
-            op.ok, op.error = False, "; ".join(reasons)
-            self._fail(f"cycle {tag}: {op.error}")
-        self.progress += batches
-        b_silver, f_silver = _tree_bytes(silver)
-        b_gold, f_gold = _tree_bytes(gold)
-        self.stored.append((b_silver + b_gold) / _tree_bytes(self.bronze)[0])
-        self.written.append((b_silver + b_gold, f_silver + f_gold))
+                if wait is not None:
+                    tracer.end(wait)
+                    wait.groups.append(str(q.runId))
+            return q
+
+        q, dt = self._timed(tracer, "stream", run)
+        self.progress += [p for p in q.recentProgress if p["numInputRows"]]
         # every micro-batch merge rewrites the whole dimension
         changed = before_bytes * len(self.changes) / max(len(before), 1)
-        self.rewrite.append(self.feed_files * _tree_bytes(dim)[0] / max(changed, 1.0))
-        shutil.rmtree(lake, ignore_errors=True)
-        return op
+        self.rewrite.append(self.feed_files * _tree_bytes(self.dim)[0] / max(changed, 1.0))
+        return Op("stream", dt, self.feed_rows, error=self._check_dim(spark, before) or "")
 
-    def _check_dim(self, spark, dim: str, before: dict) -> str | None:
+    def _check_dim(self, spark, before: dict) -> str | None:
         """Each key's latest change row wins (a superseded event that is
         re-delivered after its revision must have been dropped by the
         dedup), every other row is untouched, and each key is stored
         once."""
-        rows = spark.read.parquet(dim).collect()
+        rows = spark.read.parquet(self.dim).collect()
         got = {r["mercado_id"]: r for r in rows}
         if len(rows) != len(got):
             return f"dimension holds {len(rows)} rows for {len(got)} keys"
@@ -379,8 +452,8 @@ class MedallionLoad(Workload):
         state = self.progress[-1]["stateOperators"] if self.progress else []
         return {
             "storage.stored_bytes_per_input_byte": float(np.median(self.stored)),
-            "storage.bytes_written_per_op": sum(b for b, _ in self.written) / n,
-            "storage.files_written_per_op": sum(f for _, f in self.written) / n,
+            "storage.bytes_written_per_pass": sum(b for b, _ in self.written) / n,
+            "storage.files_written_per_pass": sum(f for _, f in self.written) / n,
             "sources.upsert_rewrite_ratio": float(np.median(self.rewrite)),
             "streaming.add_batch_pct": share("addBatch"),
             "streaming.query_planning_pct": share("queryPlanning"),
